@@ -2,9 +2,11 @@
 """Offline parser test & throughput harness (≈ logmetrics_parsertest,
 reference ``parsertest.go:45-85`` / ``parsertest/logmetrics_parsertest.go``).
 
-Replays a pages table through one log group's regex suite and reports
-match rate + throughput — the reference's correctness/perf check for
-a config's regexes, Spark-sized:
+Replays a pages table through each log group's regex suite — the same
+first-match-wins parse kernel the pipeline runs
+(``operators.parse.make_parse_fn``) — and reports match rate +
+throughput, the reference's correctness/perf check for a config's
+regexes, Spark-sized:
 
   python jobs/parser_test.py --config configs/rest_api.toml \
       --pages /path/pages [--group rest.api] [--show-failed N]
@@ -12,6 +14,8 @@ a config's regexes, Spark-sized:
 Prints per-group: lines read, lines matched, bytes read, match rate,
 and line/s / Mb/s — the same figures as the reference's
 "%d line/s %d match/s %.3f Mb/s" report (``parsertest.go:27-39``).
+``--show-failed N`` prints N lines that no pattern of the group
+matches.
 """
 
 from __future__ import annotations
@@ -21,7 +25,20 @@ import os
 import sys
 import time
 
+import pandas as pd
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from logmetrics_spark.config import LogGroup  # noqa: E402
+from logmetrics_spark.operators.parse import first_match, make_parse_fn, split_lines  # noqa: E402
+
+
+def failed_lines(pages_pdf: pd.DataFrame, lg: LogGroup) -> pd.Series:
+    """Lines (within the long-line guard) that no pattern of the
+    group's first-match-wins suite matches."""
+    lines = split_lines(pages_pdf, lg.max_line_size)
+    _, pending = first_match(lines, list(lg.regexes), lg.expected_matches)
+    return pending["line"]
 
 
 def main() -> None:
@@ -31,19 +48,18 @@ def main() -> None:
     ap.add_argument("--group", default=None)
     ap.add_argument("--show-failed", type=int, default=0,
                     help="print N non-matching lines (warn_on_regex_fail analog)")
-    ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count()))
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.parse import parse_stage
     from logmetrics_spark.session import get_spark
 
     cfg = load_config(args.config)
     spark = get_spark("parser_test", master=f"local[{args.cores}]",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
-    pages = spark.read.parquet(args.pages)
+    pages = spark.read.parquet(args.pages).select("url", "warc_ts", "lang", "text")
 
     for lg in cfg.log_groups:
         if args.group and lg.name != args.group:
@@ -51,15 +67,25 @@ def main() -> None:
         src = pages
         if lg.url_match:
             src = src.filter(F.col("url").rlike(lg.url_match))
-        stats = src.agg(
-            F.sum(F.size(F.split("text", "\n"))).alias("line_read"),
-            F.sum(F.length("text")).alias("byte_read"),
-        ).collect()[0]
+        parse_frame = make_parse_fn(lg)
+
+        def counts(batches):
+            for pdf in batches:
+                out = parse_frame(pdf)
+                yield pd.DataFrame({
+                    "line_read": [int(pdf["text"].str.count("\n").sum()) + len(pdf)],
+                    "byte_read": [int(pdf["text"].str.len().sum())],
+                    "matched": [0 if out is None else len(out)],
+                })
+
         t0 = time.time()
-        matched = parse_stage(pages, lg, observe=False).count()
+        stats = src.mapInPandas(counts, "line_read long, byte_read long, matched long").agg(
+            *(F.sum(c).alias(c) for c in ("line_read", "byte_read", "matched"))
+        ).first()
         dt = time.time() - t0
         line_read = stats["line_read"] or 0
         byte_read = stats["byte_read"] or 0
+        matched = stats["matched"] or 0
         rate = matched / line_read if line_read else 0.0
         print(
             f"[{lg.name}] lines={line_read} matched={matched} "
@@ -68,12 +94,12 @@ def main() -> None:
             f"{byte_read / dt / 1e6:.3f} Mb/s"
         )
         if args.show_failed:
-            lines = src.select(
-                F.explode(F.split("text", "\n")).alias("line")
-            ).filter(F.length("line") < lg.max_line_size)
-            pat = lg.regexes[0]
-            failed = lines.filter(~F.col("line").rlike(pat)).limit(args.show_failed)
-            for r in failed.collect():
+
+            def failures(batches):
+                for pdf in batches:
+                    yield pd.DataFrame({"line": failed_lines(pdf, lg).to_numpy()})
+
+            for r in src.mapInPandas(failures, "line string").limit(args.show_failed).collect():
                 print("  FAIL:", r["line"][:200])
     spark.stop()
 

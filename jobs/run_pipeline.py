@@ -47,7 +47,7 @@ def main() -> None:
 
     from logmetrics_spark.config import load_config
     from logmetrics_spark.plans.lineage import run_resumable
-    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.plans.pipeline import run_pipeline_multi, write_outputs
     from logmetrics_spark.sources.tableio import TableIO
 
     builder = SparkSession.builder.appName("logmetrics_spark.pipeline")
@@ -58,52 +58,28 @@ def main() -> None:
     spark = builder.getOrCreate()
 
     cfgs = [load_config(c) for c in args.config]
-    cfg = cfgs[0]
     lookups = {}
     for spec in args.lookup:
         name, path = spec.split("=", 1)
         lookups[name] = spark.read.parquet(path)
 
-    def build(pages):
-        if len(cfgs) == 1:
-            return run_pipeline(spark, cfg, pages, io=None, lookups=lookups, write=False)
-        from logmetrics_spark.plans.pipeline import run_pipeline_multi
-
-        return run_pipeline_multi(spark, cfgs, pages, lookups=lookups)
-
     if args.resume_dir:
         if len(cfgs) > 1:
             ap.error("--resume-dir supports a single --config")
-        stats = run_resumable(spark, cfg, args.pages, args.resume_dir, lookups)
+        stats = run_resumable(spark, cfgs[0], args.pages, args.resume_dir, lookups)
         print(stats)
-    elif args.do_not_send:
-        from logmetrics_spark.operators.route import console_sink
-
-        res = build(spark.read.parquet(args.pages))
-        n = console_sink(res.routed)
-        print(f"# {n} lines (not sent: -D)", file=sys.stderr)
     else:
-        if not args.out:
+        if not (args.out or args.do_not_send):
             ap.error("--out is required unless -D/--do-not-send is set")
-        pages = spark.read.parquet(args.pages)
-        io = TableIO(root=args.out)
-        if len(cfgs) == 1:
-            res = run_pipeline(spark, cfg, pages, io=io, lookups=lookups, write=True)
-            print({"routed_manifest": res.stats.get("routed_manifest", {}).get("snapshot_id")})
-        else:
-            from logmetrics_spark.operators.route import (
-                pool_stats,
-                pusher_stats,
-                write_routed,
-            )
+        res = run_pipeline_multi(spark, cfgs, spark.read.parquet(args.pages), lookups=lookups)
+        if args.do_not_send:
+            from logmetrics_spark.operators.route import console_sink
 
-            res = build(pages)
-            manifest = write_routed(res.routed, io)
-            routed_back = io.read(spark, "routed")
-            io.write(pusher_stats(routed_back), "stats_pusher", manifest_extra={"kind": "stats"})
-            io.write(pool_stats(res.emissions), "stats_pool",
-                     manifest_extra={"kind": "stats"})
-            print({"routed_manifest": manifest.get("snapshot_id")})
+            n = console_sink(res.routed)
+            print(f"# {n} lines (not sent: -D)", file=sys.stderr)
+        else:
+            write_outputs(spark, res, TableIO(root=args.out))
+            print({"routed_manifest": res.stats["routed_manifest"].get("snapshot_id")})
     spark.stop()
 
 

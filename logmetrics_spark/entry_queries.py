@@ -1303,6 +1303,16 @@ reference = [[0, ""]]
     ).log_groups[0]
 
 
+def _events_emissions(dp):
+    """Phase A over the events datapoints, then the mixed-group crunch
+    (the events group neither sends duplicates nor removes stale keys,
+    so no last-window bound is needed)."""
+    from .operators.aggregate import crunch_emissions_multi, partial_stage
+
+    lg = _events_lg()
+    return crunch_emissions_multi(partial_stage(dp, lg), {lg.name: lg}, {lg.name: -1})
+
+
 def _meter_ewma_sql(tick: int = 3600, interval: int = 86400) -> str:
     """DuckDB oracle for the Meter emission stream.
 
@@ -1375,10 +1385,7 @@ def q_meter_ewma(spark, sf_dir):
     key at daily push boundaries (go-timemetrics Meter semantics,
     datapool.go:263). Oracled: the EWMA recurrence has a closed form
     over data ticks (see _meter_ewma_sql)."""
-    from .operators.aggregate import aggregate_stage
-
-    dp = _events_as_datapoints(spark, sf_dir, "meter")
-    em = aggregate_stage(dp, _events_lg())
+    em = _events_emissions(_events_as_datapoints(spark, sf_dir, "meter"))
     return em.select("key_id", "boundary", "ending", "ts", F.round("value_num", 6).alias("v"))
 
 
@@ -1459,10 +1466,7 @@ def q_hist_reservoir(spark, sf_dir):
     sampling, datapool.go:256-258). Oracled: the reservoir is the
     deterministic top-k by md5-derived log-priority (see
     _hist_reservoir_sql)."""
-    from .operators.aggregate import aggregate_stage
-
-    dp = _events_as_datapoints(spark, sf_dir, "histogram")
-    em = aggregate_stage(dp, _events_lg())
+    em = _events_emissions(_events_as_datapoints(spark, sf_dir, "histogram"))
     return em.select("key_id", "boundary", "ending", "ts", F.round("value_num", 6).alias("v"))
 
 

@@ -40,13 +40,10 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 (max 2^60-1 < 2^63, exact
 # knob: within-bucket pair volume is n^2/2^width per band, and the
 # r03 probe measured the previous 52-bit/8192-bucket space saturating
 # by ~3x10^5 docs (candidate volume super-linear, 291M at 1M docs) —
-# 60 bits buys 4x. The packed-int64 ceiling this constant used to be
-# is LIFTED in r04: :func:`simhash_bands` / :func:`simhash_pairs_wide`
-# store one signature column PER BAND (each its own int64, up to 60
-# bits per band), so total width scales to n_bands*60 bits — enough
-# for any corpus. The 60-bit packed form stays as the oracle-replayed
-# default; at ~10^7+ docs run the wide path (e.g. bits_per_band=24:
-# 16.7M buckets/band).
+# 60 bits buys 4x. :func:`simhash_bands` stores one signature column
+# PER BAND (each its own int64, up to 60 bits per band), so its total
+# width scales to n_bands*60 bits; the 60-bit packed form is the one
+# pair path (:func:`simhash_pairs`) and the oracle-replayed default.
 NGRAM_N = 3
 
 
@@ -909,72 +906,6 @@ def simhash_pairs(
     )
     return within.unionByName(across).filter(
         F.col("id_a") != F.col("id_b")  # dirty-input guard
-    )
-
-
-def simhash_pairs_wide(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bits_per_band: int = 24,
-    n_bands: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming <= max_hamming over a WIDE
-    (bits_per_band * n_bands)-bit signature — the corpus-scale form of
-    :func:`simhash_pairs` with no packed-int64 width ceiling (one
-    signature column per band; see :func:`simhash_bands`).
-
-    Still EXACT by Hamming pigeonhole (n_bands >= max_hamming+1
-    disjoint bands: within distance d, at least one of d+1 bands
-    matches bit-for-bit), still the shared one-shuffle
-    :func:`band_bucket_pairs` generation — band b's bucket key IS its
-    signature column, no bit slicing. Hamming is verified across ALL
-    bands (fold over per-band XOR popcounts). Width sizing: expected
-    within-bucket pair volume per band is n^2 / 2^(bits_per_band+1) —
-    choose bits_per_band ~ log2(n / target_occupancy); 24 bits holds
-    ~2x10^8 docs at occupancy ~16, 30 bits ~10^10.
-    Returns (id_a, id_b, hamming)."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    if n_bands < max_hamming + 1:
-        raise ValueError(
-            f"pigeonhole needs n_bands >= max_hamming+1 ({n_bands} < {max_hamming + 1})"
-        )
-    sb = simhash_bands(docs, bits_per_band, n_bands, id_col, text_col)
-    sigs = F.array(*[F.col(f"sig_{b}") for b in range(n_bands)])
-    entries = sb.select("id", sigs.alias("sigs")).select(
-        "id",
-        "sigs",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col("sigs").getItem(b).cast("string").alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sigs", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    pairs = band_bucket_pairs(entries, ["id", "sigs"], bucket_cap=bucket_cap)
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("a.sigs"),
-            F.col("b.sigs"),
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return (
-        pairs.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "hamming")
-        .filter(F.col("id_a") != F.col("id_b"))  # dirty-input guard
-        .distinct()
     )
 
 

@@ -3,26 +3,30 @@
 Two-phase design (SURVEY.md §7.1 step 5) — the crux for both oracle
 equality and the N->4N scaling target:
 
-**Phase A — native, salt-safe partial aggregation.** Every reduction
-is associative, so Spark's map-side partial aggregation (and AQE skew
-splitting) applies before any shuffle:
+**Phase A — in-task partial aggregation** (:func:`local_reduce_frame`,
+run inside the fused kernel and by :func:`partial_stage`). Every
+reduction is associative, so each Arrow batch is pre-reduced before
+any shuffle:
 
-- meters/counters: ``groupBy(key, window, tick).sum(value)`` — pure
-  JVM; EWMA state depends only on per-tick sums, never intra-tick
-  order (timemetrics.MeterState);
+- meters/counters: per-(key, window, tick) sums — EWMA state depends
+  only on per-tick sums, never intra-tick order
+  (timemetrics.MeterState);
 - histograms: the exp-decay reservoir equals the top-``s`` records by
-  deterministic log-priority, so per-partition ``mapInPandas`` keeps at
-  most ``s`` candidates per (key, window) locally (an exact combiner:
-  top-s of a union == top-s of the union of per-part top-s), bounding
-  shuffle volume to ``s * partitions`` rows per (key, window). The
-  uniform draw is computed natively (md5/conv, whole-stage codegen);
-  only ``log`` runs in numpy, shared bit-for-bit with the oracle.
+  deterministic log-priority, so each batch keeps at most ``s``
+  candidates per (key, window) (an exact combiner: top-s of a union ==
+  top-s of the union of per-part top-s), bounding shuffle volume to
+  ``s * batches`` rows per (key, window). The uniform comes from the
+  numpy seed mix :func:`datapoint_h52`, shared bit-for-bit with the
+  oracle and the live stream.
 
-**Phase B — per-key crunch.** ``groupBy(key).applyInPandas`` over the
-*partials* (tiny: windows x ticks per key, reservoir candidates capped)
-replays event-time order: EWMA ticking, reservoir merge, interval push
-gating (``datapool.go:280-307``), stale zero-out + removal
+**Phase B — per-key crunch.** One hash shuffle on (group, key) plus a
+sorted, partition-batched ``mapInPandas`` over the *partials* (tiny:
+windows x ticks per key, reservoir candidates capped) replays
+event-time order: EWMA ticking, reservoir merge, interval push gating
+(``datapool.go:280-307``), stale zero-out + removal
 (``datapool.go:315-334``), duplicate heartbeats (``datapool.go:336-355``).
+Partials of every log group share that one crunch; each key reads its
+own group's emission parameters.
 
 Emission spec (epoch-aligned windows ``w = floor(ts / interval)``,
 boundary ``B = (w+1)*interval``), per key per window from its first
@@ -50,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup
+from ..contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2, md5_52_py
 from ..timemetrics import (
     CounterState,
     HistogramState,
@@ -58,7 +63,6 @@ from ..timemetrics import (
     np_priorities,
     np_uniform_from_hash52,
 )
-from .datapoints import h52_expr
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
 
@@ -79,18 +83,37 @@ EMISSION_SCHEMA = (
 _META_COLS = list(KEY_COLS) + ["never_stale"]
 
 
-def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
-    """In-memory phase-A reduction of one datapoint frame (must carry
-    ``w``, ``t``, ``h52`` columns): per-(key, w, t) sums for
-    meters/counters, top-s reservoir candidates per (key, w) for
-    histograms. Shared by the staged local reducer and the fused
-    kernel — associativity makes any batching sound."""
-    if pdf.empty:
+def datapoint_h52(key_id: pd.Series, record_id: _np.ndarray) -> _np.ndarray:
+    """Reservoir seed per datapoint (contracts.py r03): md5 only per
+    DISTINCT key; the per-datapoint seed is the exact multiply-xorshift
+    mix of (key_h, record_id) — bit-identical to contracts.h52_py."""
+    kmap = {k: md5_52_py(k) for k in key_id.unique()}
+    kh = key_id.map(kmap).to_numpy(dtype="int64")
+    z = kh ^ (record_id & MASK52)
+    w = (SEED_A * (z ^ (z >> XS))) % HASH_PRIME
+    return ((SEED_A2 * (w ^ (w >> XS2)) + SEED_B) % HASH_PRIME).astype("float64")
+
+
+def local_reduce_frame(dp: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
+    """In-memory phase-A reduction of one datapoint frame (the reduce
+    half of the fused kernel): adds window ``w`` and EWMA tick ``t``
+    columns to ``dp`` in place, then per-(key, w, t) sums for
+    meters/counters and top-s reservoir candidates per (key, w) for
+    histograms, carrying the group max ts (dropped rows still count as
+    updates for push gating / staleness). The crunch merges partials
+    from different batches/partitions, so this only needs to be
+    *sound* (associative), not complete."""
+    if dp.empty:
         return None
     size = lg.histogram_size
     alpha = lg.histogram_alpha_decay
-    hist = pdf[pdf["metric_type"] == "histogram"]
-    rest = pdf[pdf["metric_type"] != "histogram"]
+    ts = dp["ts_sec"].to_numpy()
+    mt = dp["metric_type"].to_numpy()
+    is_hist = mt == "histogram"
+    dp["w"] = ts // lg.interval
+    dp["t"] = _np.where(mt == "meter", ts // lg.ewma_interval, 0)
+    hist = dp[is_hist]
+    rest = dp[~is_hist]
     frames = []
     if len(rest):
         sums = rest.groupby(_META_COLS + ["w", "t"], sort=False, as_index=False).agg(
@@ -101,12 +124,11 @@ def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
         sums["val"] = pd.array([None] * len(sums), dtype="Int64")
         frames.append(sums)
     if len(hist):
-        u = np_uniform_from_hash52(hist["h52"].to_numpy())
+        u = np_uniform_from_hash52(datapoint_h52(hist["key_id"], hist["record_id"].to_numpy()))
         hist = hist.assign(pri=np_priorities(hist["ts_sec"].to_numpy(), u, alpha))
         # group rides in the reservoir keys: the crunch segments state
-        # on (group, key_id) for exactly this collision, and a future
-        # multi-group caller of this shared reducer must not merge two
-        # groups' reservoirs through a shared key_id
+        # on (group, key_id), and two groups may share a key_id — their
+        # reservoirs must not merge
         grp = hist.groupby(["group", "key_id", "w"], sort=False)
         hist = hist.assign(grp_max_ts=grp["ts_sec"].transform("max"))
         kept = (
@@ -135,46 +157,11 @@ def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
 
 
 def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
-    """Phase A: associative pre-aggregation of raw datapoints.
-
-    Single pass, no shuffle: window/tick assignment and the reservoir
-    uniform are native column exprs (codegen, fused with the upstream
-    parse/fan-out stage), then ONE ``mapInPandas`` local reducer
-    combines, per Arrow batch,
-
-    - meters/counters: per-(key, w, t) sums (the map-side combine),
-    - histograms: top-s reservoir candidates per (key, w), carrying
-      the group max ts (dropped rows still count as updates for push
-      gating / staleness).
-
-    The crunch merges partials from different batches/partitions, so
-    the local reduction only needs to be *sound* (associative), not
-    complete — shuffle volume drops from |datapoints| to
-    O(distinct keys x windows) per partition batch.
-    """
-    interval = lg.interval
-    ewma = lg.ewma_interval
-    size = lg.histogram_size
-    alpha = lg.histogram_alpha_decay
-
-    is_meter = F.col("metric_type") == "meter"
-    is_hist = F.col("metric_type") == "histogram"
-    enriched = (
-        dp.withColumn("w", F.floor(F.col("ts_sec") / interval).cast("long"))
-        .withColumn(
-            "t",
-            F.when(is_meter, F.floor(F.col("ts_sec") / ewma).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        .withColumn(
-            # deterministic uniform seed (contracts.py r03): md5 of
-            # the key mixed with record_id — identical to
-            # timemetrics.det_uniform and the fused kernel's numpy mix
-            "h52",
-            F.when(is_hist, h52_expr(F.col("key_id"), F.col("record_id"))),
-        )
-    )
+    """Phase A over a datapoint table (``datapoints.DATAPOINT_SCHEMA``
+    columns) that did not come from pages: one narrow ``mapInPandas``
+    running :func:`local_reduce_frame` per Arrow batch — the same
+    reduction the fused kernel applies — so shuffle volume drops from
+    |datapoints| to O(distinct keys x windows) per batch."""
 
     def local_reduce(batches):
         for pdf in batches:
@@ -182,7 +169,7 @@ def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
             if out is not None:
                 yield out
 
-    return enriched.mapInPandas(local_reduce, schema=PARTIAL_SCHEMA)
+    return dp.mapInPandas(local_reduce, schema=PARTIAL_SCHEMA)
 
 
 def _new_state(metric_type: str, lg: LogGroup):
@@ -420,24 +407,17 @@ _META = list(KEY_COLS)  # single source of truth for emission metadata order
 _OUT_COLS = _META + ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
 
 
-def make_crunch_mapper(lg: LogGroup, global_last_w: int):
-    """Partition-batched phase-B mapper: input sorted by
-    (key_id, w, t, rid) within hash(key_id) partitions; iterates keys
-    with numpy segmentation — amortizes per-key overhead across the
-    whole Arrow batch (vs per-group applyInPandas calls, which cost
-    ~ms per key and serialize the 40k-key case)."""
-    return make_multi_crunch_mapper({lg.name: lg}, {lg.name: global_last_w}, default=lg)
-
-
 def make_multi_crunch_mapper(
     lg_by_group: dict[str, LogGroup],
     last_w_by_group: dict[str, int] | None,
-    default: LogGroup | None = None,
 ):
-    """Phase-B mapper over MIXED-group partials: each key dispatches
-    to its own log group's emission parameters via the ``group``
-    column — N groups share ONE shuffle and one crunch stage (the
-    single-scan pipeline's back half).
+    """Partition-batched phase-B mapper over MIXED-group partials:
+    input sorted by (group, key_id, w, t, rid) within hash partitions;
+    keys are segmented with numpy, which amortizes per-key overhead
+    across the whole Arrow batch (per-group applyInPandas calls cost
+    ~ms per key). Each key dispatches to its own log group's emission
+    parameters via the ``group`` column — N groups share ONE shuffle
+    and one crunch stage (the single-scan pipeline's back half).
 
     ``last_w_by_group=None`` switches to the LAZY gating contract: the
     input frames carry a ``glw`` column (per-group global last window,
@@ -446,7 +426,7 @@ def make_multi_crunch_mapper(
     dict — no collect() ever blocks plan construction."""
 
     def _lg_of(group: str) -> LogGroup:
-        got = lg_by_group.get(group, default)
+        got = lg_by_group.get(group)
         if got is None:
             raise KeyError(f"crunch: unknown log group {group!r}")
         return got
@@ -592,23 +572,22 @@ def _null_safe_partials(partials: DataFrame) -> DataFrame:
     )
 
 
-def crunch_emissions(
-    partials: DataFrame, lg: LogGroup, global_last_w: int, num_partitions: int | None = None
-) -> DataFrame:
-    """Phase B over partials: hash-partition by key, sort within
-    partitions, run the batched mapper (one shuffle, bounded state).
+def _crunch(partials: DataFrame, mapper, num_partitions: int | None) -> DataFrame:
+    """Hash-partition the partials by (group, key), sort within
+    partitions, run the batched crunch mapper (one shuffle, bounded
+    state).
 
     Defaults to 4x the shuffle parallelism: crunch cost per partition
     is compute-bound (python per key), not bytes-bound, so finer
     tasks rebalance stragglers (AQE never coalesces an explicit
-    repartition, and on this VM a steal burst can stall one task 2x+
-    — measured 24s -> 16s at 8 cores from this alone)."""
+    repartition, and on a noisy VM a steal burst can stall one task
+    2x+ — measured 24s -> 16s at 8 cores from this alone)."""
     spark = partials.sparkSession
     n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rep = _null_safe_partials(partials).repartition(n, "group", "key_id").sortWithinPartitions(
+    rep = partials.repartition(n, "group", "key_id").sortWithinPartitions(
         "group", "key_id", "w", "t", "rid"
     )
-    return rep.mapInPandas(make_crunch_mapper(lg, global_last_w), schema=EMISSION_SCHEMA)
+    return rep.mapInPandas(mapper, schema=EMISSION_SCHEMA)
 
 
 def crunch_emissions_multi(
@@ -617,15 +596,14 @@ def crunch_emissions_multi(
     last_w_by_group: dict[str, int],
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Phase B over mixed-group partials: one shuffle + one crunch for
-    every log group together (see make_multi_crunch_mapper)."""
-    spark = partials.sparkSession
-    n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rep = _null_safe_partials(partials).repartition(n, "group", "key_id").sortWithinPartitions(
-        "group", "key_id", "w", "t", "rid"
-    )
-    return rep.mapInPandas(
-        make_multi_crunch_mapper(lg_by_group, last_w_by_group), schema=EMISSION_SCHEMA
+    """Phase B over mixed-group partials with driver-known per-group
+    last windows (``-1`` when no group sends duplicates or removes
+    stale keys): one shuffle + one crunch for every log group together
+    (see make_multi_crunch_mapper)."""
+    return _crunch(
+        _null_safe_partials(partials),
+        make_multi_crunch_mapper(lg_by_group, last_w_by_group),
+        num_partitions,
     )
 
 
@@ -646,45 +624,9 @@ def crunch_emissions_lazy(
     subquery and the main stage both consume them, and only ONE
     broadcast thread exists (no stampede — the r02 failure mode needed
     two concurrent broadcast consumers of an unpopulated cache)."""
-    spark = partials.sparkSession
-    n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     gw = partials.groupBy("group").agg(F.max("w").alias("glw"))
-    rep = (
-        _null_safe_partials(partials)
-        .join(F.broadcast(gw), "group")
-        .repartition(n, "group", "key_id")
-        .sortWithinPartitions("group", "key_id", "w", "t", "rid")
+    return _crunch(
+        _null_safe_partials(partials).join(F.broadcast(gw), "group"),
+        make_multi_crunch_mapper(lg_by_group, None),
+        num_partitions,
     )
-    return rep.mapInPandas(
-        make_multi_crunch_mapper(lg_by_group, None), schema=EMISSION_SCHEMA
-    )
-
-
-def aggregate_stage(
-    dp: DataFrame, lg: LogGroup, global_last_w: int | None = None
-) -> DataFrame:
-    """datapoints -> emissions. If ``global_last_w`` is None it is
-    computed from the (persisted) partials — one tiny action; pass it
-    explicitly to keep the plan lazy (e.g. from source table stats).
-
-    Why persist+collect here (dups/stale on) instead of a lazy
-    self-join: the crunch mapper needs the scalar bound BEFORE its
-    closure ships, and joining partials against an aggregate of
-    themselves would re-run the expensive parse kernel twice in one
-    DAG (mapInPandas output is not a reusable exchange). Persisting
-    the partials — O(keys x windows), tiny at any scale — and reading
-    one max is strictly cheaper; the fast path (no dups/stale) skips
-    even that and stays a single fused job."""
-    partials = partial_stage(dp, lg)
-    if global_last_w is None:
-        if not lg.send_duplicates and not lg.stale_removal:
-            # fast path never reads the global bound (no heartbeat
-            # windows, no stale tail) -> stays a single fused job
-            # with a constant -1 bound.
-            return crunch_emissions(partials, lg, -1)
-        # dups/stale: the bound is joined in lazily (broadcast 1-row
-        # per-group max) — no driver collect, still ONE action; the
-        # persist keeps the expensive parse kernel from running once
-        # for the broadcast subquery and once for the crunch.
-        return crunch_emissions_lazy(partials.persist(), {lg.name: lg})
-    return crunch_emissions(partials, lg, global_last_w)

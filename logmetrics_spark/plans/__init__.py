@@ -1,1 +1,1 @@
-from .pipeline import run_pipeline, build_emissions, build_datapoints  # noqa: F401
+from .pipeline import run_pipeline, run_pipeline_multi  # noqa: F401

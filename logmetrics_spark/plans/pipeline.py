@@ -1,20 +1,21 @@
 """End-to-end pipeline assembly: pages table -> per-sink routed tables.
 
 Mirrors the reference daemon's dataflow (``main/logmetrics_collector.go``,
-SURVEY.md §3.1) as one declarative DataFrame plan per log group:
+SURVEY.md §3.1) as ONE declarative DataFrame plan for every log group
+of every config:
 
-    scan(pages) -> parse (split/guard native + regex-suite pandas UDF)
-                -> transform (Catalyst exprs)
-                -> enrich (broadcast lookup)
-                -> datapoint fan-out (explode)
-                -> phase-A partial agg (native sums + reservoir combiner)
-                -> phase-B per-key crunch (applyInPandas)
+    scan(pages) -> fused kernel (mapInPandas): parse -> transform
+                   -> enrich (broadcast dict) -> datapoint fan-out
+                   -> phase-A local reduction (sums + reservoir combiner)
+                -> ONE shuffle on (group, key)
+                -> phase-B mixed-group per-key crunch (sorted mapInPandas)
                 -> route (line render + md5 sink hash)
                 -> per-sink partitioned write + stats tables
 
 Catalyst/Tungsten replace the reference's goroutines+channels; the
-shuffle between fan-out and phase A replaces the file->datapool
-modulo partitioning (``logtail.go:209-217``).
+shuffle between phase A and phase B replaces the file->datapool
+modulo partitioning (``logtail.go:209-217``). A single config is the
+one-config case of :func:`run_pipeline_multi`.
 """
 
 from __future__ import annotations
@@ -22,15 +23,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import LogGroup, PipelineConfig
-from ..operators.aggregate import aggregate_stage
-from ..operators.datapoints import datapoint_stage
-from ..operators.enrich import enrich_stage
-from ..operators.parse import parse_stage
+from ..operators.aggregate import crunch_emissions_lazy, crunch_emissions_multi
+from ..operators.fused import fused_partials_multi
 from ..operators.route import pool_stats, pusher_stats, route_stage, write_routed
-from ..operators.transform import transform_stage
 from ..sources.tableio import TableIO
 
 
@@ -39,15 +36,6 @@ class PipelineResult:
     routed: DataFrame
     emissions: DataFrame
     stats: dict = field(default_factory=dict)
-
-
-def build_datapoints(
-    pages: DataFrame, lg: LogGroup, lookup: DataFrame | None = None
-) -> DataFrame:
-    matched = parse_stage(pages, lg)
-    matched = transform_stage(matched, lg)
-    matched, extra_tags = enrich_stage(matched, lg, lookup)
-    return datapoint_stage(matched, lg, extra_tags)
 
 
 def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
@@ -64,30 +52,17 @@ def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
     return d
 
 
-def build_emissions(
-    pages: DataFrame,
-    lg: LogGroup,
-    lookup: DataFrame | None = None,
-    global_last_w: int | None = None,
-    mode: str = "fused",
-) -> DataFrame:
-    """``mode="fused"``: one-kernel pages->partials (production path —
-    only pages enter Python, only partials leave). ``mode="staged"``:
-    discrete operators with Catalyst-visible transform/fan-out exprs
-    (introspectable; used by operator-level tests and lineage units).
-    Both are pinned to the same oracle."""
-    from ..operators.aggregate import crunch_emissions, crunch_emissions_lazy
-    from ..operators.fused import fused_partials
-
-    if mode == "fused":
-        partials = fused_partials(pages, lg, lookup_df_to_dict(lookup) if lg.lookup else None)
-        if not lg.send_duplicates and not lg.stale_removal:
-            return crunch_emissions(partials, lg, -1)
-        # dups/stale: lazy broadcast bound — no driver collect, no
-        # plan-construction jobs (see crunch_emissions_lazy)
-        return crunch_emissions_lazy(partials.persist(), {lg.name: lg})
-    dp = build_datapoints(pages, lg, lookup)
-    return aggregate_stage(dp, lg, global_last_w)
+def group_lookups(
+    log_groups, lookups: dict[str, DataFrame] | None
+) -> list[tuple[LogGroup, dict | None]]:
+    """The fused kernel's group spec: (log group, its broadcast lookup
+    dict or None) for each group; ``lookups`` maps a lookup name to its
+    dimension DataFrame."""
+    lookups = lookups or {}
+    return [
+        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
+        for lg in log_groups
+    ]
 
 
 def run_pipeline_multi(
@@ -103,17 +78,8 @@ def run_pipeline_multi(
     one-plan-per-group union did exactly that).
 
     Routing settings come from the first config (the fixture configs
-    share push_type/push_number; assert-guarded)."""
-    from ..operators.aggregate import crunch_emissions_lazy, crunch_emissions_multi
-    from ..operators.fused import fused_partials_multi
-
-    lookups = lookups or {}
-    groups: list = []
-    for cfg in cfgs:
-        for lg in cfg.log_groups:
-            groups.append(
-                (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
-            )
+    share push_type/push_number; guarded)."""
+    groups = group_lookups([lg for cfg in cfgs for lg in cfg.log_groups], lookups)
     # explicit raises, NOT asserts: these guards protect routing
     # correctness and must survive python -O / PYTHONOPTIMIZE
     names = [lg.name for lg, _ in groups]
@@ -141,14 +107,12 @@ def run_pipeline_multi(
     return PipelineResult(routed=routed, emissions=emissions)
 
 
-def _write_outputs(
-    spark: SparkSession, result: PipelineResult, io: TableIO | None, write: bool
-) -> None:
-    if not (write and io is not None):
-        return
+def write_outputs(spark: SparkSession, result: PipelineResult, io: TableIO) -> None:
+    """Per-sink routed table plus the internal stats tables
+    (``data_pool.*`` / ``pusher.*``); the routed manifest lands in
+    ``result.stats``."""
     manifest = write_routed(result.routed, io)
     result.stats["routed_manifest"] = manifest
-    # internal stats tables (data_pool.* / pusher.*)
     routed_back = io.read(spark, "routed")
     io.write(pusher_stats(routed_back), "stats_pusher", manifest_extra={"kind": "stats"})
     io.write(pool_stats(result.emissions), "stats_pool", manifest_extra={"kind": "stats"})
@@ -161,36 +125,11 @@ def run_pipeline(
     io: TableIO | None = None,
     lookups: dict[str, DataFrame] | None = None,
     write: bool = True,
-    mode: str = "fused",
 ) -> PipelineResult:
-    """Run every configured log group and union the routed output.
-
-    In fused mode a MULTI-group config routes through
-    :func:`run_pipeline_multi`: one config with two grammars must cost
-    ONE scan of the pages table, exactly like two configs do (the
-    v2 shape built one plan per group and re-scanned per group)."""
-    lookups = lookups or {}
-    if mode == "fused" and len(cfg.log_groups) > 1:
-        result = run_pipeline_multi(spark, [cfg], pages, lookups=lookups)
-        _write_outputs(spark, result, io, write)
-        return result
-
-    routed_parts: list[DataFrame] = []
-    emission_parts: list[DataFrame] = []
-
-    for lg in cfg.log_groups:
-        emissions = build_emissions(pages, lg, lookups.get(lg.lookup or ""), mode=mode)
-        routed = route_stage(emissions, cfg.settings)
-        emission_parts.append(emissions)
-        routed_parts.append(routed)
-
-    all_emissions = emission_parts[0]
-    for part in emission_parts[1:]:
-        all_emissions = all_emissions.unionByName(part)
-    all_routed = routed_parts[0]
-    for part in routed_parts[1:]:
-        all_routed = all_routed.unionByName(part)
-
-    result = PipelineResult(routed=all_routed, emissions=all_emissions, stats={})
-    _write_outputs(spark, result, io, write)
+    """Run every log group of one config off one pages scan
+    (:func:`run_pipeline_multi` with one config), then write the sink
+    and stats tables when ``write`` and ``io`` are given."""
+    result = run_pipeline_multi(spark, [cfg], pages, lookups=lookups)
+    if write and io is not None:
+        write_outputs(spark, result, io)
     return result

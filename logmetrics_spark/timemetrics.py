@@ -55,8 +55,8 @@ _U_DENOM = float(1 << 52)
 def det_uniform(key: str, record_id: int) -> float:
     """Deterministic near-uniform from the r03 seed contract: md5 of
     the KEY (low-cardinality) mixed with the record id via the exact
-    multiply-xorshift (contracts.h52_py) — same bits as the native
-    h52_expr and the fused kernel's numpy path.
+    multiply-xorshift (contracts.h52_py) — same bits as the engine's
+    numpy path (aggregate.datapoint_h52).
 
     Range note (ADVICE r03): h52 ranges over [0, P-1] with
     P = 2^52 + 21, so u = (h52+1)/(2^52+1) lies in (0, P/(2^52+1)] —

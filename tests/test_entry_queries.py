@@ -18,7 +18,9 @@ SAMPLE = [
     "parse_extract",
     "transform_replace_chain",
     "meter_window_sum",
+    "meter_ewma",
     "hist_percentiles",
+    "hist_reservoir",
     "stale_keys",
     "enrich_broadcast_join",
     "dedup_exact",

@@ -1,4 +1,5 @@
-"""Parse-stage tests: match arity, group values, guards, dates,
+"""Parse-step tests (``make_parse_fn``, the first step of the fused
+kernel): match arity, group values, guards, dates, the url filter,
 byte-identical text per url (SURVEY.md §5, input_hint invariant)."""
 
 import hashlib
@@ -6,8 +7,7 @@ import hashlib
 import pandas as pd
 from pyspark.sql import functions as F
 
-from logmetrics_spark.operators.parse import parse_stage
-from logmetrics_spark.sources.synth import gen_page
+from logmetrics_spark.operators.parse import make_parse_fn
 
 REST_LINE = (
     "Feb  8 04:02:26 rest1.mynetwork rest_sales.api: [INFO] [performance] "
@@ -17,18 +17,23 @@ REST_LINE = (
 
 
 def _pages_df(spark, rows):
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-    )
+    return spark.createDataFrame(_pages_pdf(rows))
+
+
+def _pages_pdf(rows):
+    return pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+
+
+def _parse(lg, rows) -> list[dict]:
+    out = make_parse_fn(lg)(_pages_pdf(rows))
+    return [] if out is None else out.to_dict("records")
 
 
 def test_readme_example_line_groups(spark, rest_cfg):
     lg = rest_cfg.log_groups[0]
-    df = _pages_df(
-        spark,
-        [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", REST_LINE, "en")],
+    out = _parse(
+        lg, [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", REST_LINE, "en")]
     )
-    out = parse_stage(df, lg).collect()
     assert len(out) == 1
     r = out[0]
     # the README's worked example (README.md:198-219)
@@ -46,30 +51,26 @@ def test_readme_example_line_groups(spark, rest_cfg):
 
 def test_non_matching_line_dropped(spark, rest_cfg):
     lg = rest_cfg.log_groups[0]
-    df = _pages_df(
-        spark,
-        [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", "no metrics here", "en")],
-    )
-    assert parse_stage(df, lg).count() == 0
+    rows = [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", "no metrics here", "en")]
+    assert _parse(lg, rows) == []
 
 
 def test_long_line_guard(spark, rest_cfg):
     lg = rest_cfg.log_groups[0]
     long_line = REST_LINE + " " * 2500  # pushes over max_line_size
-    df = _pages_df(
-        spark,
-        [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", long_line, "en")],
-    )
-    assert parse_stage(df, lg).count() == 0
+    rows = [("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", long_line, "en")]
+    assert _parse(lg, rows) == []
 
 
 def test_url_match_filters_foreign_pages(spark, rest_cfg):
+    """The url filter runs in the JVM (rlike), ahead of the kernel."""
+    from logmetrics_spark.operators.fused import fused_partials_multi
+
     lg = rest_cfg.log_groups[0]
-    df = _pages_df(
-        spark,
-        [("https://www1.apache.example/x", pd.Timestamp("2024-02-08"), b"", REST_LINE, "en")],
-    )
-    assert parse_stage(df, lg).count() == 0
+    own = ("https://rest1.mynetwork/x", pd.Timestamp("2024-02-08"), b"", REST_LINE, "en")
+    foreign = ("https://www1.apache.example/x", pd.Timestamp("2024-02-08"), b"", REST_LINE, "en")
+    assert fused_partials_multi(_pages_df(spark, [foreign]), [(lg, None)]).count() == 0
+    assert fused_partials_multi(_pages_df(spark, [own]), [(lg, None)]).count() > 0
 
 
 def test_filename_groups_appended(spark, apache_cfg):
@@ -78,11 +79,10 @@ def test_filename_groups_appended(spark, apache_cfg):
         "10.0.0.1\t-\t-\t8/Feb/2024:04:02:26 +0000\tGET /buy/now.php HTTP/1.1\t200"
         "\t1234\thttp://r/\tUA\t4520"
     )
-    df = _pages_df(
-        spark,
+    r = _parse(
+        lg,
         [("https://www3.apache.example/httpd_access/9", pd.Timestamp("2024-02-08"), b"", line, "en")],
-    )
-    r = parse_stage(df, lg).collect()[0]
+    )[0]
     assert r["g2"] == "GET" and r["g3"] == "/buy/now.php" and r["g4"] == "200"
     assert r["g7"] == "www3"  # url-derived group (≈ logtail.go:131-134)
     assert r["g8"] == "httpd_access"
@@ -95,11 +95,8 @@ def test_bad_date_drops_line(spark, apache_cfg):
         "10.0.0.1\t-\t-\t99/Zzz/2024:99:99:99 +0000\tGET /a HTTP/1.1\t200"
         "\t1\thttp://r/\tUA\t5"
     )
-    df = _pages_df(
-        spark,
-        [("https://www3.apache.example/httpd_access/9", pd.Timestamp("2024-02-08"), b"", line, "en")],
-    )
-    assert parse_stage(df, lg).count() == 0
+    rows = [("https://www3.apache.example/httpd_access/9", pd.Timestamp("2024-02-08"), b"", line, "en")]
+    assert _parse(lg, rows) == []
 
 
 def test_byte_identical_text_per_url(spark, pages, spec):
@@ -117,17 +114,6 @@ def test_byte_identical_text_per_url(spark, pages, spec):
     for u, t in zip(truth_pdf["url"], truth_pdf["text"]):
         h = hashlib.md5(t.encode()).hexdigest()
         assert got[u] == (h, h), f"text invariant broken for {u}"
-
-
-def test_observe_counters(spark, rest_cfg, pages):
-    from logmetrics_spark.operators.parse import OBS_LINES, OBS_MATCHED
-
-    lg = rest_cfg.log_groups[0]
-    df = parse_stage(pages, lg)
-    from pyspark.sql.observation import Observation  # noqa: F401  (API presence)
-
-    n = df.count()
-    assert n > 0
 
 
 def test_multi_regex_first_match_wins(spark):
@@ -150,10 +136,8 @@ reference = [[1, ""]]
     )
     lg = cfg.log_groups[0]
     text = "A=7 B=here\n12 goes there\nA=9 B=both 99 goes nowhere\nnothing"
-    df = _pages_df(
-        spark, [("https://x/p", pd.Timestamp("2024-02-01"), b"", text, "en")]
-    )
-    rows = {r["line_no"]: (r["g1"], r["g2"]) for r in parse_stage(df, lg).collect()}
+    parsed = _parse(lg, [("https://x/p", pd.Timestamp("2024-02-01"), b"", text, "en")])
+    rows = {r["line_no"]: (r["g1"], r["g2"]) for r in parsed}
     assert rows == {
         0: ("7", "here"),     # pattern 1
         1: ("12", "there"),   # pattern 2 only
@@ -199,3 +183,34 @@ reference = [[0, ""]]
     lines = buf.getvalue().strip().split("\n")
     assert n == len(lines) and n > 0
     assert all(l.startswith("put t.lines.") for l in lines)
+
+
+def test_parser_test_show_failed_uses_first_match_suite():
+    """jobs/parser_test.py --show-failed: a line that only the SECOND
+    pattern matches is not a failure (the first-match-wins suite
+    decides, not the first pattern alone)."""
+    import importlib.util
+    import os
+
+    from logmetrics_spark.config import load_config_str
+
+    spec = importlib.util.spec_from_file_location(
+        "parser_test", os.path.join(os.path.dirname(__file__), "..", "jobs", "parser_test.py")
+    )
+    parser_test = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(parser_test)
+    lg = load_config_str(
+        """
+[log_groups.two]
+re = ['A=(\\d+)', 'B=(\\d+)']
+expected_matches = 1
+key_prefix = "t"
+[[log_groups.two.metrics.meter]]
+key_suffix = "k"
+reference = [[1, ""]]
+"""
+    ).log_groups[0]
+    text = "A=1\nB=2\nC=3\n" + "A=" + "9" * 3000
+    pdf = _pages_pdf([("https://x/p", pd.Timestamp("2024-02-01"), b"", text, "en")])
+    # B=2 matches pattern 2 only; the over-long line is guarded, not failed
+    assert list(parser_test.failed_lines(pdf, lg)) == ["C=3"]

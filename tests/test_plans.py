@@ -171,9 +171,9 @@ def test_core_pipeline_scan_hygiene(spark):
     """The fused pipeline's scan must show the pushed url filter and
     never read the html column."""
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.fused import fused_partials
+    from logmetrics_spark.operators.fused import fused_partials_multi
 
-    cfg = load_config("/root/repo/configs/apache.toml")
+    cfg = load_config("configs/apache.toml")
     pages = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("url"),
         F.current_timestamp().alias("warc_ts"),
@@ -187,66 +187,48 @@ def test_core_pipeline_scan_hygiene(spark):
     with tempfile.TemporaryDirectory() as td:
         pages.write.mode("overwrite").parquet(td)
         src = spark.read.parquet(td)
-        plan = _physical(fused_partials(src, cfg.log_groups[0], observe=False))
+        plan = _physical(fused_partials_multi(src, [(cfg.log_groups[0], None)]))
         assert "html" not in plan.split("ReadSchema")[-1]
         if cfg.log_groups[0].url_match:
             assert "PushedFilters: [IsNotNull(url)" in plan or "url" in plan.split("PushedFilters")[-1].split("]")[0]
 
 
-def test_phase_a_combiner_bounds_shuffle_volume(spark):
+def test_phase_a_combiner_bounds_shuffle_volume(spark, rest_cfg):
     """The 100-TB claim in numbers: phase-A partials (what actually
     crosses the shuffle) must be bounded by keys x windows x
     (ticks-per-window + histogram cap) per PARTITION — independent of
     the raw datapoint count."""
-    import numpy as np
-
-    from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.fused import fused_partials
-    from logmetrics_spark.plans.pipeline import build_datapoints
-    from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
-
     import dataclasses
 
-    cfg = load_config("/root/repo/configs/rest_api.toml")
+    import numpy as np
+
+    from logmetrics_spark.operators.fused import fused_partials_multi, make_datapoints_fn
+    from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
+
     # throughput profile (the bench shape): 5-min windows — with 15s
     # windows over a 10-min span every (key, w, t) holds ~1 datapoint
     # and there is nothing TO combine; reduction is a property of
     # pages >> keys x windows, which is what a real corpus has
-    lg = dataclasses.replace(cfg.log_groups[0], interval=300, ewma_interval=60)
+    lg = dataclasses.replace(rest_cfg.log_groups[0], interval=300, ewma_interval=60)
     spec = SynthSpec(n_rows=4000, time_span_seconds=600)
-    pages = spark.createDataFrame(gen_pages_pdf(np.arange(4000), spec)).repartition(4)
+    pages_pdf = gen_pages_pdf(np.arange(4000), spec)
+    pages = spark.createDataFrame(pages_pdf).repartition(4)
 
-    from pyspark.sql import functions as F2
+    mine = pages_pdf[pages_pdf["url"].str.contains(lg.url_match)] if lg.url_match else pages_pdf
+    dp = make_datapoints_fn(lg)(mine[["url", "warc_ts", "lang", "text"]])
+    assert len(dp) > 10_000  # the fan-out actually fanned out
+    partials = fused_partials_multi(pages, [(lg, None)]).persist()
 
-    dp = build_datapoints(pages, lg).persist()
-    n_dp = dp.count()
-    assert n_dp > 10_000  # the fan-out actually fanned out
-    partials = fused_partials(pages, lg, observe=False).persist()
-
-    is_hist = F2.col("metric_type") == "histogram"
-    n_sum_dp = dp.filter(~is_hist).count()
+    is_hist = F.col("metric_type") == "histogram"
     n_sum_partials = partials.filter(~is_hist).count()
     n_hist_partials = partials.filter(is_hist).count()
 
-    distinct_kwt = (
-        dp.filter(~is_hist)
-        .select(
-            "key_id",
-            F2.floor(F2.col("ts_sec") / lg.interval).alias("w"),
-            F2.when(
-                F2.col("metric_type") == "meter",
-                F2.floor(F2.col("ts_sec") / lg.ewma_interval),
-            ).otherwise(F2.lit(0)).alias("t"),
-        )
-        .distinct()
-        .count()
-    )
-    distinct_hist_kw = (
-        dp.filter(is_hist)
-        .select("key_id", F2.floor(F2.col("ts_sec") / lg.interval).alias("w"))
-        .distinct()
-        .count()
-    )
+    dp["w"] = dp["ts_sec"] // lg.interval
+    dp["t"] = np.where(dp["metric_type"] == "meter", dp["ts_sec"] // lg.ewma_interval, 0)
+    sums_dp = dp[dp["metric_type"] != "histogram"]
+    n_sum_dp = len(sums_dp)
+    distinct_kwt = len(sums_dp[["key_id", "w", "t"]].drop_duplicates())
+    distinct_hist_kw = len(dp[dp["metric_type"] == "histogram"][["key_id", "w"]].drop_duplicates())
     # exact bounds: sums <= partitions x distinct (key,w,t);
     # reservoir candidates <= partitions x cap x distinct (key,w)
     assert n_sum_partials <= 4 * distinct_kwt
@@ -255,7 +237,6 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
     assert n_sum_partials < n_sum_dp / 2, (
         f"combiner ineffective: {n_sum_partials} vs {n_sum_dp}"
     )
-    dp.unpersist()
     partials.unpersist()
 
 
@@ -362,18 +343,17 @@ def test_dups_stale_crunch_is_lazy(spark):
     collect (the r02 shape blocked plan construction on a max(w)
     action and forced a two-job run)."""
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.plans.pipeline import build_emissions
+    from logmetrics_spark.plans.pipeline import run_pipeline_multi
     from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
     import numpy as np
 
     cfg = load_config("configs/apache.toml")
-    lg = cfg.log_groups[0]
-    assert lg.send_duplicates or lg.stale_removal
+    assert any(lg.send_duplicates or lg.stale_removal for lg in cfg.log_groups)
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(50), SynthSpec(n_rows=50)))
     sc = spark.sparkContext
     sc.setJobGroup("lazy-crunch-probe", "plan construction must be lazy")
     try:
-        em = build_emissions(pages, lg, None, mode="fused")
+        em = run_pipeline_multi(spark, [cfg], pages).emissions
     finally:
         sc.setJobGroup(None, None)
     ids = sc.statusTracker().getJobIdsForGroup("lazy-crunch-probe")
@@ -406,51 +386,39 @@ def test_emb_lsh_plan_knob():
     assert planes == 60 * 4
 
 
-def test_simhash_wide_matches_packed_layout(spark, docs):
-    """simhash_pairs_wide at the historic (15-bit, 4-band) layout
-    returns EXACTLY simhash_pairs' result — per-band columns are a
-    representation change, not a semantic one."""
-    d = docs.limit(120)
-    packed = {(r["id_a"], r["id_b"], r["hamming"]) for r in D.simhash_pairs(d, 3).collect()}
-    wide = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in D.simhash_pairs_wide(d, 3, bits_per_band=15, n_bands=4).collect()
-    }
-    assert wide == packed
-
-
 def test_simhash_wide_banding_exact_96bit(spark):
-    """96-bit (24x4) wide simhash: pigeonhole banding is exact vs the
-    brute-force Hamming filter over the per-band signature columns —
-    the width regime the packed int64 could not represent."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(12),
-            "text": [
-                "alpha beta gamma delta", "alpha beta gamma delta",
-                "alpha beta gamma epsilon", "one two three four",
-                "one two three four five", "totally different words here",
-                "alpha beta gamma delta zeta", "x y z w", "x y z w",
-                "lorem ipsum dolor sit", "lorem ipsum dolor sat",
-                "unrelated standalone doc",
-            ],
-        }
-    )
-    docs = spark.createDataFrame(pdf)
+    """96-bit (24x4) per-band simhash signatures equal a pure-Python
+    replay of the spec: bit j of a distinct token comes from 60-bit md5
+    chunks (hex chars 1-15, then 16-30), the doc bit is set when more
+    than half of its distinct tokens set it — the width regime the
+    packed int64 could not represent."""
+    import hashlib
+
+    texts = [
+        "alpha beta gamma delta", "alpha beta gamma delta",
+        "alpha beta gamma epsilon", "one two three four",
+        "one two three four five", "totally different words here",
+        "alpha beta gamma delta zeta", "x y z w", "x y z w",
+        "lorem ipsum dolor sit", "lorem ipsum dolor sat",
+        "unrelated standalone doc",
+    ]
+    docs = spark.createDataFrame(pd.DataFrame({"doc_id": range(12), "text": texts}))
     rows = D.simhash_bands(docs, bits_per_band=24, n_bands=4).collect()
-    sig = {r["id"]: [r[f"sig_{b}"] for b in range(4)] for r in rows}
-    expect = set()
-    for i in sorted(sig):
-        for j in sorted(sig):
-            if i < j:
-                ham = sum(bin(a ^ b).count("1") for a, b in zip(sig[i], sig[j]))
-                if ham <= 3:
-                    expect.add((i, j, ham))
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in D.simhash_pairs_wide(docs, 3, bits_per_band=24, n_bands=4).collect()
-    }
-    assert got == expect
+    got = {r["id"]: [r[f"sig_{b}"] for b in range(4)] for r in rows}
+
+    def replay(text: str) -> list[int]:
+        toks = set(text.split(" "))
+        ones = [0] * 96
+        for t in toks:
+            h = hashlib.md5(t.encode()).hexdigest()
+            value = int(h[0:15], 16) | (int(h[15:30], 16) << 60)
+            for j in range(96):
+                ones[j] += (value >> j) & 1
+        bits = [2 * c > len(toks) for c in ones]
+        return [sum(1 << i for i in range(24) if bits[24 * b + i]) for b in range(4)]
+
+    assert got == {i: replay(t) for i, t in enumerate(texts)}
+    assert got[0] == got[1] and got[7] == got[8]  # clones share every band
 
 
 def test_connected_components_max_iter_raises(spark):

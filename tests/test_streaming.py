@@ -1,21 +1,46 @@
-"""Structured Streaming stage tests: file-source stream, watermarked
-partials (streaming result == batch result), stateful meter operator."""
+"""Structured Streaming tests: file-source stream, streaming
+datapoints == the oracle's, the live stateful emission operator
+(meters, histograms, stale zero-out, heartbeats, lookup tags), and
+streaming routed output == batch routed output."""
 
+import collections
 import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from logmetrics_spark.plans.pipeline import build_datapoints
+from logmetrics_spark.oracle import parse_pages
 from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
 from logmetrics_spark.streaming.stream_pipeline import (
     read_pages_stream,
     run_stream_to_table,
     streaming_datapoints,
-    streaming_meters,
-    streaming_partials,
+    streaming_emissions,
 )
+
+
+def _oracle_datapoints(pdf, lg, metric_type=None):
+    return [
+        d for d in parse_pages(pdf.to_dict("records"), lg)
+        if metric_type is None or d["metric_type"] == metric_type
+    ]
+
+
+def _latest_snapshots(rows):
+    """key_id -> {ending: value} of the last data-driven live snapshot
+    (heartbeats and stale zero-outs excluded)."""
+    last_ts: dict = {}
+    snaps: dict = collections.defaultdict(dict)
+    for r in rows:
+        if r["is_dup"] or r["is_zero"]:
+            continue
+        k = r["key_id"]
+        if k not in last_ts or r["ts"] > last_ts[k]:
+            last_ts[k] = r["ts"]
+            snaps[k] = {}
+        if r["ts"] == last_ts[k]:
+            snaps[k][r["ending"]] = r["value_num"]
+    return snaps
 
 
 @pytest.fixture(scope="module")
@@ -39,64 +64,45 @@ def stream_dirs(spark, tmp_path_factory):
     return {"flat": flat, "base": str(base), "pdf": pdf}
 
 
-def test_streaming_partials_match_batch(spark, rest_cfg, stream_dirs):
+def test_streaming_datapoints_match_batch(spark, rest_cfg, stream_dirs):
+    """The datapoints half as a stateless streaming mapInPandas emits
+    exactly the oracle's datapoints for the same pages."""
     lg = rest_cfg.log_groups[0]
     stream = read_pages_stream(spark, stream_dirs["flat"], max_files=1)
-    sp = streaming_partials(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
-    out = f"{stream_dirs['base']}/partials_out"
-    ck = f"{stream_dirs['base']}/ck1"
-    q = run_stream_to_table(sp, out, ck)
+    out = f"{stream_dirs['base']}/dp_out"
+    q = run_stream_to_table(streaming_datapoints(stream, lg), out, f"{stream_dirs['base']}/ck1")
     q.awaitTermination(120)
 
-    got = spark.read.parquet(out)
-    batch_pages = spark.read.parquet(stream_dirs["flat"])
-    bdp = build_datapoints(batch_pages, lg)
-    expect = (
-        bdp.withColumn("event_time", F.col("ts_sec").cast("timestamp"))
-        .groupBy(
-            "key_id",
-            F.window("event_time", f"{lg.interval} seconds").alias("win"),
-        )
-        .agg(F.sum("value").alias("psum"))
-        .select("key_id", F.unix_timestamp("win.start").cast("long").alias("w_start"), "psum")
+    cols = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags",
+            "ref_tag", "never_stale", "ts_sec", "value", "record_id"]
+    got = collections.Counter(tuple(r[c] for c in cols) for r in spark.read.parquet(out).collect())
+    expect = collections.Counter(
+        tuple(d[c] for c in cols) for d in _oracle_datapoints(stream_dirs["pdf"], lg)
     )
-    g = {(r["key_id"], r["w_start"]): r["psum"] for r in got.select("key_id", "w_start", "psum").collect()}
-    e = {(r["key_id"], r["w_start"]): r["psum"] for r in expect.collect()}
-    # append-mode streaming emits only watermark-closed windows: subset
-    assert g, "stream produced no partials"
-    for k, v in g.items():
-        assert e.get(k) == v, f"partial mismatch at {k}: {v} vs {e.get(k)}"
-    # with watermark 0 and availableNow, all but the last window close
-    assert len(g) >= len(e) - len({r["key_id"] for r in expect.collect()})
+    assert got, "stream produced no datapoints"
+    assert got == expect
 
 
 def test_streaming_meters_stateful(spark, rest_cfg, stream_dirs):
+    """Live meter state: the last data snapshot of every meter key
+    counts exactly the key's datapoint total, with non-negative
+    rates."""
     lg = rest_cfg.log_groups[0]
     stream = read_pages_stream(spark, stream_dirs["flat"], max_files=2)
-    sm = streaming_meters(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
+    em = streaming_emissions(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
     out = f"{stream_dirs['base']}/meters_out"
-    ck = f"{stream_dirs['base']}/ck2"
-    q = run_stream_to_table(sm, out, ck)
+    q = run_stream_to_table(em, out, f"{stream_dirs['base']}/ck2")
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    rows = got.collect()
+    rows = [r for r in spark.read.parquet(out).collect() if r["metric_type"] == "meter"]
     assert rows, "stateful meter stream produced no rows"
-    batch_counts = {
-        r["key_id"]: r["total"]
-        for r in build_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
-        .filter(F.col("metric_type") == "meter")
-        .groupBy("key_id")
-        .agg(F.sum("value").alias("total"))
-        .collect()
-    }
-    # last state snapshot per key must equal the batch total
-    latest = {}
-    for r in rows:
-        if r["key_id"] not in latest or r["ts"] >= latest[r["key_id"]]["ts"]:
-            latest[r["key_id"]] = r
-    for k, r in latest.items():
-        assert batch_counts.get(k) == r["count"], f"meter count mismatch for {k}"
-    assert all(r["rate_1min"] >= 0 for r in rows)
+    batch_counts: collections.Counter = collections.Counter()
+    for d in _oracle_datapoints(stream_dirs["pdf"], lg, "meter"):
+        batch_counts[d["key_id"]] += d["value"]
+    latest = _latest_snapshots(rows)
+    assert set(latest) == set(batch_counts)
+    for k, snap in latest.items():
+        assert snap["count"] == batch_counts[k], f"meter count mismatch for {k}"
+    assert all(r["value_num"] >= 0 for r in rows if r["ending"].startswith("rate."))
 
 
 def test_streaming_routed_foreachbatch_resume(spark, apache_cfg, stream_dirs, tmp_path):
@@ -152,15 +158,9 @@ def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
 
     import pandas as pd
 
-    from logmetrics_spark.sources.synth import PAGES_SCHEMA_DDL
-    from logmetrics_spark.streaming.stream_pipeline import (
-        read_pages_stream,
-        run_stream_to_table,
-        streaming_datapoints,
-        streaming_meters,
+    lg = dataclasses.replace(
+        rest_cfg.log_groups[0], stale_removal=True, stale_treshold_min=1
     )
-
-    lg = dataclasses.replace(rest_cfg.log_groups[0], stale_treshold_min=1)
     src = str(tmp_path / "pages")
     base_line = (
         "Jan  1 00:00:{s:02d} rest01.example rest_a.api: blah [c:q] (10) "
@@ -189,15 +189,21 @@ def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
         shutil.copy(f, f"{flat}/file{i}.parquet")
 
     stream = read_pages_stream(spark, flat, max_files=1)
-    sm = streaming_meters(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
+    em = streaming_emissions(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
     out = str(tmp_path / "zout")
-    q = run_stream_to_table(sm, out, str(tmp_path / "zck"))
+    q = run_stream_to_table(em, out, str(tmp_path / "zck"))
     q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    zeroed = [r for r in rows if r["count"] == 0 and r["rate_1min"] == 0.0]
-    assert zeroed, f"no zeroed eviction snapshot emitted; rows={rows}"
-    # the early key (rest01) is the one evicted
-    assert any("host=rest01" in r["key_id"] for r in zeroed)
+    rows = [r for r in spark.read.parquet(out).collect() if r["metric_type"] == "meter"]
+    zeroed = [r for r in rows if r["is_zero"]]
+    assert zeroed, f"no zeroed eviction snapshot emitted; rows={rows[:5]}"
+    assert all(r["value_num"] == 0.0 for r in zeroed)
+    # the early key (rest01) is the one evicted, at the first interval
+    # boundary past its one-minute TTL
+    early = [r for r in rows if "host=rest01" in r["key_id"]]
+    assert {r["key_id"] for r in zeroed} == {r["key_id"] for r in early}
+    last_update = max(r["ts"] for r in early if not (r["is_dup"] or r["is_zero"]))
+    deadline = last_update + 60
+    assert {r["boundary"] for r in zeroed} == {-(-deadline // lg.interval) * lg.interval}
 
 
 def test_streaming_incremental_growth_equals_batch(spark, apache_cfg, tmp_path):
@@ -250,9 +256,7 @@ def test_streaming_histograms_converge_to_batch_reservoir(spark, rest_cfg, strea
     """The live reservoir's final snapshot per key equals the
     deterministic top-s reservoir computed directly from all
     datapoints (state merge law == batch combiner law)."""
-    import hashlib
-
-    from logmetrics_spark.streaming.stream_pipeline import streaming_histograms
+    from logmetrics_spark.contracts import h52_py, md5_52_py
     from logmetrics_spark.timemetrics import (
         HistogramState,
         np_priorities,
@@ -261,34 +265,22 @@ def test_streaming_histograms_converge_to_batch_reservoir(spark, rest_cfg, strea
 
     lg = rest_cfg.log_groups[0]
     stream = read_pages_stream(spark, stream_dirs["flat"], max_files=1)
-    sh = streaming_histograms(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
+    em = streaming_emissions(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
     out = f"{stream_dirs['base']}/hist_out"
-    q = run_stream_to_table(sh, out, f"{stream_dirs['base']}/ck_h")
+    q = run_stream_to_table(em, out, f"{stream_dirs['base']}/ck_h")
     q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
+    rows = [r for r in spark.read.parquet(out).collect() if r["metric_type"] == "histogram"]
     assert rows, "stateful histogram stream produced no rows"
-    latest = {}
-    for r in rows:
-        if r["key_id"] not in latest or r["ts"] >= latest[r["key_id"]]["ts"]:
-            latest[r["key_id"]] = r
+    latest = _latest_snapshots(rows)
 
-    dp = (
-        build_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
-        .filter(F.col("metric_type") == "histogram")
-        .collect()
-    )
     by_key: dict = {}
-    for r in dp:
-        by_key.setdefault(r["key_id"], []).append(r)
-    import numpy as np
-
+    for d in _oracle_datapoints(stream_dirs["pdf"], lg, "histogram"):
+        by_key.setdefault(d["key_id"], []).append(d)
+    assert set(latest) == set(by_key)
     for key, recs in by_key.items():
         hs = HistogramState(size=lg.histogram_size, alpha=lg.histogram_alpha_decay)
-        from logmetrics_spark.contracts import h52_py, md5_52_py
-
         h52 = np.array(
-            [h52_py(md5_52_py(key), r["record_id"]) for r in recs],
-            dtype="float64",
+            [h52_py(md5_52_py(key), r["record_id"]) for r in recs], dtype="float64"
         )
         pris = np_priorities(
             np.array([r["ts_sec"] for r in recs], dtype="float64"),
@@ -301,10 +293,9 @@ def test_streaming_histograms_converge_to_batch_reservoir(spark, rest_cfg, strea
         )
         snap = hs.snapshot()
         got = latest[key]
-        assert got["sample_size"] == snap["sample_size"], key
-        assert got["min"] == snap["min"] and got["max"] == snap["max"], key
-        assert abs(got["mean"] - snap["mean"]) < 1e-9, key
-        assert abs(got["p95"] - snap["p95"]) < 1e-9, key
+        assert set(got) == set(snap), key
+        for ending, v in snap.items():
+            assert abs(got[ending] - v) < 1e-9, (key, ending)
 
 
 def test_streaming_live_heartbeats_match_batch_dups(spark, rest_cfg, tmp_path):
@@ -362,6 +353,29 @@ def test_streaming_live_heartbeats_match_batch_dups(spark, rest_cfg, tmp_path):
     assert not missing, f"live heartbeat lines not in batch dups: {sorted(missing)[:5]}"
     # the live view must have covered more than one heartbeat boundary
     assert len({r["boundary"] for r in live if r["is_dup"] and "host=rest01.example" in r["tags"]}) >= 2
+
+
+def test_streaming_live_lookup_tags_match_batch(spark, apache_cfg, stream_dirs, tmp_path):
+    """The live view enriches like batch: every live non-dup apache
+    line carries the same tags (hosts lookup dimensions included) as
+    the batch line for that key."""
+    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_pdf
+    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
+
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    out = str(tmp_path / "out")
+    q = run_streaming_live(spark, apache_cfg, stream_dirs["flat"], out, lookups=lk)
+    q.awaitTermination(180)
+    live = [r for r in spark.read.parquet(out + "/routed_live").collect() if not r["is_dup"]]
+    assert live, "live view produced no rows"
+    batch = run_pipeline(
+        spark, apache_cfg, spark.read.parquet(stream_dirs["flat"]), lookups=lk, write=False
+    )
+    batch_tags = {r["key_id"]: r["tags"] for r in batch.routed.select("key_id", "tags").collect()}
+    for r in live:
+        assert batch_tags.get(r["key_id"]) == r["tags"], r["line"]
+    assert any("cluster=c" in r["tags"] for r in live)
 
 
 def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
