@@ -7,8 +7,13 @@ Usage:
       --out /path/to/out [--resume-dir /path/state] [--lookup hosts=/path]
 
 Batch mode by default; --resume-dir switches to the per-partition
-lineage/resume path (plans.lineage). At cluster scale set
---shuffle-partitions ~ 2-3x total executor cores.
+lineage/resume path (plans.lineage).
+
+Without --shuffle-partitions the job sets spark.sql.shuffle.partitions
+to the context's default parallelism (total executor cores in cluster
+mode, N for local[N]). The per-key crunch runs exactly that many Python
+tasks, one per core: each Python task pays a fixed boundary cost, so
+more tasks than cores add overhead without adding parallelism.
 """
 
 from __future__ import annotations
@@ -53,9 +58,11 @@ def main() -> None:
     builder = SparkSession.builder.appName("logmetrics_spark.pipeline")
     builder = builder.config("spark.sql.session.timeZone", "UTC")
     builder = builder.config("spark.sql.adaptive.enabled", "true")
-    if args.shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(args.shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
 
     cfgs = [load_config(c) for c in args.config]
     lookups = {}
@@ -80,6 +87,7 @@ def main() -> None:
         else:
             write_outputs(spark, res, TableIO(root=args.out))
             print({"routed_manifest": res.stats["routed_manifest"].get("snapshot_id")})
+        res.release()
     spark.stop()
 
 

@@ -64,7 +64,9 @@ def route_stage(emissions: DataFrame, settings: Settings) -> DataFrame:
 def pool_stats(emissions: DataFrame) -> DataFrame:
     """Internal data_pool stats per (group, boundary):
     ``key_tracked`` = live keys at the boundary, ``key_staled`` =
-    cumulative endings zeroed-out so far (``datapool.go:217-223``)."""
+    cumulative endings zeroed-out so far (``datapool.go:217-223``).
+    Takes emissions or routed rows: both carry ``group``, ``key_id``,
+    ``boundary`` and ``is_zero``, one row per emission."""
     from pyspark.sql.window import Window
 
     per_b = emissions.groupBy("group", "boundary").agg(

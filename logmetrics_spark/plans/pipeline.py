@@ -36,6 +36,15 @@ class PipelineResult:
     routed: DataFrame
     emissions: DataFrame
     stats: dict = field(default_factory=dict)
+    # frames the run persisted; the result owns them until release()
+    pinned: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Unpersist every frame the run pinned. Idempotent, and safe
+        after ``spark.catalog.clearCache()`` (unpersisting an uncached
+        frame is a no-op)."""
+        while self.pinned:
+            self.pinned.pop().unpersist()
 
 
 def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
@@ -94,28 +103,35 @@ def run_pipeline_multi(
 
     partials = fused_partials_multi(pages, groups)
     lg_by_group = {lg.name: lg for lg, _ in groups}
+    pinned = []
     if any(lg.send_duplicates or lg.stale_removal for lg, _ in groups):
         # lazy per-group bound via broadcast join — no driver collect,
         # one action end to end (empty input degrades through the
         # inner join to an empty emission table)
-        emissions = crunch_emissions_lazy(partials.persist(), lg_by_group)
+        pinned.append(partials.persist())
+        emissions = crunch_emissions_lazy(partials, lg_by_group)
     else:
         emissions = crunch_emissions_multi(
             partials, lg_by_group, {n: -1 for n in lg_by_group}
         )
     routed = route_stage(emissions, cfgs[0].settings)
-    return PipelineResult(routed=routed, emissions=emissions)
+    return PipelineResult(routed=routed, emissions=emissions, pinned=pinned)
 
 
 def write_outputs(spark: SparkSession, result: PipelineResult, io: TableIO) -> None:
     """Per-sink routed table plus the internal stats tables
     (``data_pool.*`` / ``pusher.*``); the routed manifest lands in
-    ``result.stats``."""
+    ``result.stats``.
+
+    Both stats tables read the written routed table back: a routed row
+    carries its emission's ``group``, ``key_id``, ``boundary`` and
+    ``is_zero`` (route.ROUTED_COLS), one row per emission, so the
+    crunch runs once per call instead of again for ``stats_pool``."""
     manifest = write_routed(result.routed, io)
     result.stats["routed_manifest"] = manifest
     routed_back = io.read(spark, "routed")
     io.write(pusher_stats(routed_back), "stats_pusher", manifest_extra={"kind": "stats"})
-    io.write(pool_stats(result.emissions), "stats_pool", manifest_extra={"kind": "stats"})
+    io.write(pool_stats(routed_back), "stats_pool", manifest_extra={"kind": "stats"})
 
 
 def run_pipeline(

@@ -13,10 +13,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build a session. Defaults: local[N] from $SPARK_GRAFT_CPUS (32),
-    AQE on (runtime coalesce + skew-join), UTC session timezone (the
-    engine's event-time contract), Arrow enabled for pandas UDFs."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build a session. Defaults: local[N] and N shuffle partitions,
+    where N is $SPARK_GRAFT_CPUS or else the CPUs this process may run
+    on (``os.sched_getaffinity``); AQE on (runtime coalesce +
+    skew-join), UTC session timezone (the engine's event-time
+    contract), Arrow enabled for pandas UDFs."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions if shuffle_partitions is not None else int(cpus)
     builder = (

@@ -203,3 +203,88 @@ def test_single_config_multi_group_single_scan(spark, pages, pages_pdf, rest_cfg
         n_scans = plan.count("Scan parquet")
         n_cached = plan.count("InMemoryRelation")
         assert n_scans == max(n_cached, 1), plan
+
+
+def _pinned_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _apache_stale_run(spark, apache_cfg, n_rows, root):
+    """Apache fixture (dups/stale on, ``hosts`` lookup) over a span
+    long enough for keys to go stale; routed + stats tables under
+    ``root``. Returns (result, TableIO, pages frame)."""
+    import numpy as np
+
+    from logmetrics_spark.plans.pipeline import run_pipeline_multi, write_outputs
+    from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
+    from logmetrics_spark.sources.tableio import TableIO
+
+    spec = SynthSpec(n_rows=n_rows, time_span_seconds=1500)
+    pdf = gen_pages_pdf(np.arange(spec.n_rows), spec)
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    res = run_pipeline_multi(spark, [apache_cfg], spark.createDataFrame(pdf), lookups=lk)
+    io = TableIO(root=str(root))
+    write_outputs(spark, res, io)
+    return res, io, pdf
+
+
+def test_write_outputs_stats_tables_equal_oracle(spark, apache_cfg, tmp_path):
+    """``stats_pool`` / ``stats_pusher`` written by write_outputs equal
+    the same stats computed in pure Python from the oracle's routed
+    rows: per (group, boundary) the distinct non-zero key count and the
+    cumulative zero-row count, per sink the row count and line bytes."""
+    res, io, pdf = _apache_stale_run(spark, apache_cfg, 120, tmp_path)
+    res.release()
+    rows = run_oracle(pdf.to_dict("records"), apache_cfg, {"hosts": gen_hosts_lookup_dict()})
+    assert any(r["is_zero"] for r in rows)  # the cumulative key_staled is exercised
+
+    tracked: dict = {}
+    zeros: collections.Counter = collections.Counter()
+    for r in rows:
+        gb = (r["group"], r["boundary"])
+        keys = tracked.setdefault(gb, set())
+        if r["is_zero"]:
+            zeros[gb] += 1
+        else:
+            keys.add(r["key_id"])
+    expect_pool = {}
+    staled: collections.Counter = collections.Counter()
+    for g, b in sorted(tracked):
+        staled[g] += zeros[(g, b)]
+        expect_pool[(g, b)] = (len(tracked[(g, b)]), staled[g])
+    got_pool = {
+        (r["group"], r["ts"]): (r["key_tracked"], r["key_staled"])
+        for r in io.read(spark, "stats_pool").collect()
+    }
+    assert got_pool == expect_pool
+
+    expect_pusher: dict = collections.defaultdict(lambda: [0, 0])
+    for r in rows:
+        expect_pusher[r["sink"]][0] += 1
+        expect_pusher[r["sink"]][1] += len(r["line"])
+    got_pusher = {
+        r["sink"]: [r["key_sent"], r["byte_sent"]]
+        for r in io.read(spark, "stats_pusher").collect()
+    }
+    assert got_pusher == dict(expect_pusher)
+
+
+def test_release_unpersists_what_the_run_pinned(spark, apache_cfg, tmp_path):
+    """PipelineResult.release() owns the dups/stale partials persist:
+    afterwards nothing the run cached stays cached; it is idempotent
+    and safe after clearCache."""
+    before = _pinned_rdd_ids(spark)
+    res, _, _ = _apache_stale_run(spark, apache_cfg, 40, tmp_path / "a")
+    pinned = list(res.pinned)
+    assert pinned and all(df.storageLevel.useMemory for df in pinned)
+    assert _pinned_rdd_ids(spark) > before
+    res.release()
+    assert all(not (df.storageLevel.useMemory or df.storageLevel.useDisk) for df in pinned)
+    assert _pinned_rdd_ids(spark) == before
+    res.release()
+    assert _pinned_rdd_ids(spark) == before
+
+    res, _, _ = _apache_stale_run(spark, apache_cfg, 40, tmp_path / "b")
+    spark.catalog.clearCache()
+    res.release()
+    assert res.pinned == []

@@ -363,6 +363,36 @@ def test_dups_stale_crunch_is_lazy(spark):
     assert em.count() > 0
 
 
+def test_crunch_one_task_per_shuffle_partition(spark, rest_cfg, apache_cfg):
+    """The mixed-group crunch runs exactly spark.sql.shuffle.partitions
+    tasks (no multiplier), and its rows do not depend on that count."""
+    import numpy as np
+
+    from logmetrics_spark.operators.aggregate import crunch_emissions_multi
+    from logmetrics_spark.operators.fused import fused_partials_multi
+    from logmetrics_spark.plans.pipeline import group_lookups
+    from logmetrics_spark.sources.synth import SynthSpec, gen_hosts_lookup_pdf, gen_pages_pdf
+
+    spec = SynthSpec(n_rows=60, time_span_seconds=900)
+    pages = spark.createDataFrame(gen_pages_pdf(np.arange(spec.n_rows), spec))
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    groups = group_lookups(rest_cfg.log_groups + apache_cfg.log_groups, lk)
+    lg_by_group = {lg.name: lg for lg, _ in groups}
+    partials = fused_partials_multi(pages, groups).persist()
+    last_w = {
+        r["group"]: r["lw"]
+        for r in partials.groupBy("group").agg(F.max("w").alias("lw")).collect()
+    }
+    out = crunch_emissions_multi(partials, lg_by_group, last_w)
+    assert out.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    one = crunch_emissions_multi(partials, lg_by_group, last_w, num_partitions=1)
+    assert one.rdd.getNumPartitions() == 1
+    got = sorted(map(tuple, out.collect()))
+    assert len(got) > 0
+    assert got == sorted(map(tuple, one.collect()))
+    partials.unpersist()
+
+
 def test_emb_lsh_plan_knob():
     """Band-width autoscaling: expected bucket occupancy (n / 2^width)
     stays near the target across corpus sizes — r04: per-band int64
